@@ -214,4 +214,114 @@ class ConflictRebaseSpec extends AnyFunSuite {
     assert(kv(t.read()) == Map(7L -> "R7", 8L -> "M8", 9L -> "M9"))
     assertNoOrphans(t)
   }
+  test("append vs a disjoint append: stage() runs ONCE, both rows land") {
+    val (t, other) = fixture("graft-race-append")
+    armRace(t) { other.append(rows(Seq(500L), "a")) }
+    t.stageCounter.set(0)
+    val v = t.append(rows(Seq(600L), "b"))
+    t.beforePublishHook = () => ()
+    assert(v == 3, "create=v1, interleaved append=v2, re-pointed append=v3")
+    assert(t.stageCounter.get == 1,
+      "an append has no read footprint: a lost race never re-stages")
+    val got = kv(t.read())
+    assert(got(500L) == "a500" && got(600L) == "b600" && got.size == 62)
+    assertNoOrphans(t)
+  }
+
+  test("streamAppend of one batch id via a racing handle commits once") {
+    val (t, other) = fixture("graft-race-stream")
+    armRace(t) { other.streamAppend(rows(Seq(700L), "b"), 5L) }
+    t.stageCounter.set(0)
+    val v = t.streamAppend(rows(Seq(700L), "b"), 5L)
+    t.beforePublishHook = () => ()
+    assert(v == 2 && t.head == 2,
+      "the loser sees the racing delivery's txn and no-ops")
+    assert(t.stageCounter.get == 1, "the loser staged once, then discarded")
+    val got = kv(t.read())
+    assert(got(700L) == "b700" && got.size == 61)
+    assert(t.read().where(col("k") === 700L).count() == 1,
+      "one batch id lands exactly once")
+    assertNoOrphans(t)
+  }
+
+  test("update vs disjoint append rebases; vs stats-matching append re-composes") {
+    val (t, other) = fixture("graft-race-update")
+    armRace(t) { other.append(rows(Seq(1001L), "a")) } // outside [10, 20)
+    t.stageCounter.set(0)
+    t.update(col("k") >= 10 && col("k") < 20, Map("v" -> lit("X")))
+    t.beforePublishHook = () => ()
+    assert(t.stageCounter.get == 1, "non-matching interleaved add: rebase")
+    val got = kv(t.read())
+    assert((10L until 20L).forall(k => got(k) == "X"))
+    assert(got(1001L) == "a1001" && got(9L) == "s9" && got.size == 61)
+    armRace(t) { other.append(rows(Seq(25L), "a")) } // inside [20, 30)
+    t.stageCounter.set(0)
+    t.update(col("k") >= 20 && col("k") < 30, Map("v" -> lit("Y")))
+    t.beforePublishHook = () => ()
+    assert(t.stageCounter.get == 2, "matching add forces re-compose")
+    val at25 = t.read().where(col("k") === 25L).collect().map(_.getString(1))
+    assert(at25.toSeq == Seq("Y", "Y"),
+      "the update, serialized last, must cover the interleaved row")
+  }
+
+  test("overwriteWhere vs disjoint append rebases; vs stats-matching append re-composes") {
+    val (t, other) = fixture("graft-race-ow")
+    armRace(t) { other.append(rows(Seq(1001L), "a")) } // outside [10, 20)
+    t.stageCounter.set(0)
+    t.overwriteWhere(col("k") >= 10 && col("k") < 20, rows(Seq(10L, 11L), "O"))
+    t.beforePublishHook = () => ()
+    assert(t.stageCounter.get == 1, "non-matching interleaved add: rebase")
+    val got = kv(t.read())
+    assert(got(10L) == "O10" && got(11L) == "O11")
+    assert(!(12L until 20L).exists(got.contains))
+    assert(got(1001L) == "a1001" && got.size == 53)
+    armRace(t) { other.append(rows(Seq(25L), "a")) } // inside [20, 30)
+    t.stageCounter.set(0)
+    t.overwriteWhere(col("k") >= 20 && col("k") < 30, rows(Seq(20L), "P"))
+    t.beforePublishHook = () => ()
+    assert(t.stageCounter.get == 2, "matching add forces re-compose")
+    val got2 = kv(t.read())
+    assert(got2(20L) == "P20" && !(21L until 30L).exists(got2.contains),
+      "a matching interleaved add must not survive the overwrite")
+    assertNoOrphans(t)
+  }
+
+  test("overwriteAll racing an append: the winner's rows leave the head only") {
+    val (t, other) = fixture("graft-race-owall")
+    armRace(t) { other.append(rows(Seq(500L), "a")) }
+    t.stageCounter.set(0)
+    val v = t.overwriteAll(rows(Seq(7L, 8L), "O"))
+    t.beforePublishHook = () => ()
+    assert(v == 3, "create=v1, interleaved append=v2, overwrite=v3")
+    assert(t.stageCounter.get == 1,
+      "the overwrite reads nothing: a lost race never re-stages")
+    assert(kv(t.read()) == Map(7L -> "O7", 8L -> "O8"))
+    assert(kv(t.read(2)).contains(500L),
+      "the interleaved append's version stays readable")
+    assertNoOrphans(t)
+  }
+
+  test("compact racing an append: the appended rows survive, no orphans") {
+    val (t, other) = fixture("graft-race-compact")
+    armRace(t) { other.append(rows(Seq(500L), "a")) }
+    t.stageCounter.set(0)
+    val v = t.compact()
+    t.beforePublishHook = () => ()
+    assert(v == 3)
+    val got = kv(t.read())
+    assert(got(500L) == "a500" && got(7L) == "s7" && got.size == 61)
+    assertNoOrphans(t)
+  }
+
+  test("cluster racing an append: the appended rows survive, no orphans") {
+    val (t, other) = fixture("graft-race-cluster")
+    armRace(t) { other.append(rows(Seq(500L), "a")) }
+    t.stageCounter.set(0)
+    val v = t.cluster(Seq("k"), targetFiles = 2)
+    t.beforePublishHook = () => ()
+    assert(v == 3)
+    val got = kv(t.read())
+    assert(got(500L) == "a500" && got(7L) == "s7" && got.size == 61)
+    assertNoOrphans(t)
+  }
 }
