@@ -78,10 +78,12 @@ import org.apache.spark.sql.graftglue.PredicateTree
   * exactly one writer wins a slot. Only the slot-taken conflict
   * (FileAlreadyExists / DirectoryNotEmpty) retries; any other I/O
   * failure (ATOMIC_MOVE unsupported, disk errors) is rethrown rather
-  * than spun on. Mutators that re-stage per attempt (merge / delete /
-  * compact) DELETE the losing attempt's staged files before retrying,
-  * so contention cannot accumulate orphans; `append`/`streamAppend`
-  * stage once and re-compose only metadata on conflict.
+  * than spun on. Every writer publishes through ONE loop ([[commit]]):
+  * a loser whose read footprint the winners left alone re-points its
+  * staged files onto the new head (an append, whose footprint is
+  * empty, always does); one whose footprint they touched DELETES its
+  * staged files and re-composes, so contention cannot accumulate
+  * orphans.
   *
   * Vacuum safety: `stage()` drops a `.staging-<uuid>` marker beside the
   * staged directory BEFORE writing any data file and clears it only
@@ -97,7 +99,7 @@ import org.apache.spark.sql.graftglue.PredicateTree
 final class GraftTable private (spark: SparkSession, val root: String,
                                 keyCol: String) {
   import spark.implicits._
-  import GraftTable.{FileRef, Staged}
+  import GraftTable.{FileRef, Mutation, Staged}
 
   private val commitsDir = s"$root/commits"
   private val dataDir = s"$root/data"
@@ -720,8 +722,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * this commit still serves the old one. Renaming back to the
     * column's own physical name drops the row (identity restored). */
   def renameColumn(oldName: String, newName: String): Long =
-    commitLoop() (base =>
-      Some((applyRenameColumn(base, oldName, newName), Seq.empty)))
+    commitManifest(applyRenameColumn(_, oldName, newName))
 
   /** the rename applied to a manifest row set — every guard included,
     * so [[alterColumns]] composes it atomically with other changes */
@@ -774,7 +775,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       validateDefault(f.name, f.dataType, d)
       GraftTable.AddedCol(f.name, f.dataType, d)
     }
-    commitLoop() { base =>
+    commitManifest { base =>
       require(base.isEmpty,
         "declareColumns bootstraps an EMPTY table; declare more " +
           "columns one at a time with addColumn")
@@ -782,10 +783,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
         s"column names are identifiers: '$n'"))
       // the key stamp rides the SAME declaring commit (round 18):
       // every version of a catalog table is key-self-describing
-      Some((withFeature(cols.zipWithIndex.map {
+      withFeature(cols.zipWithIndex.map {
         case (c, i) => GraftTable.addColRow(c, ordinal = i.toLong)
-      }, "addcol") ++ keyRecord.map(GraftTable.keyRecRow),
-        Seq.empty))
+      }, "addcol") ++ keyRecord.map(GraftTable.keyRecRow)
     }
   }
 
@@ -858,7 +858,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * this commit still reads it. New writes must not reuse the retired
     * physical name. The key column cannot drop. */
   def dropColumn(name: String): Long =
-    commitLoop() (base => Some((applyDropColumn(base, name), Seq.empty)))
+    commitManifest(applyDropColumn(_, name))
 
   /** the drop applied to a manifest row set (see [[alterColumns]]) */
   private def applyDropColumn(base: Seq[FileRef],
@@ -895,8 +895,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
                 dataType: org.apache.spark.sql.types.DataType,
                 defaultSql: Option[String] = None): Long = {
     validateDefault(name, dataType, defaultSql)
-    val v = commitLoop() (base =>
-      Some((applyAddColumn(base, name, dataType, defaultSql), Seq.empty)))
+    val v = commitManifest(applyAddColumn(_, name, dataType, defaultSql))
     // an enforce-mode table's recorded schema must gain the column, or
     // every post-add write would be rejected as drift; re-capturing
     // from the head snapshot (which now includes the declaration) also
@@ -971,13 +970,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
       case GraftTable.AddCol(n, t, d) => validateDefault(n, t, d)
       case _ => ()
     }
-    val v = commitLoop() { base =>
-      Some((changes.foldLeft(base) {
-        case (b, GraftTable.RenameCol(o, n)) => applyRenameColumn(b, o, n)
-        case (b, GraftTable.DropCol(n))      => applyDropColumn(b, n)
-        case (b, GraftTable.AddCol(n, t, d)) => applyAddColumn(b, n, t, d)
-      }, Seq.empty))
-    }
+    val v = commitManifest(changes.foldLeft(_) {
+      case (b, GraftTable.RenameCol(o, n)) => applyRenameColumn(b, o, n)
+      case (b, GraftTable.DropCol(n))      => applyDropColumn(b, n)
+      case (b, GraftTable.AddCol(n, t, d)) => applyAddColumn(b, n, t, d)
+    })
     if (changes.exists(_.isInstanceOf[GraftTable.AddCol]) &&
         schemaMode() == "enforce") setSchemaMode("enforce")
     v
@@ -1427,11 +1424,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def commitPropStamp(kind: String, content: String): Unit =
     if (head > 0) {
       val stamp = GraftTable.propRow(kind, content)
-      commitLoop() { base =>
-        val kept = base.filterNot(r => r.kind == "prop" &&
-          r.file.startsWith(s"prop:$kind:"))
-        Some((kept :+ stamp, Seq.empty))
-      }
+      commitManifest(_.filterNot(r => r.kind == "prop" &&
+        r.file.startsWith(s"prop:$kind:")) :+ stamp)
       ()
     }
 
@@ -1812,16 +1806,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val v = if (version < 0) head else version
     if (v == 0) return spark.emptyDataFrame
     val refs = manifestOf(v)
-    val data = refs.filter(_.kind == "data")
     // the predicate arrives over LOGICAL names; stats/sstats/bloom
     // rows are keyed physically — resolve struct paths, then map the
     // skeleton across (x53)
-    val tree = statsTree(PredicateTree.parse(predicate), refs)
-    val cand0 = data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted
-    val cand = bloomRefine(refs, data, cand0, tree)
+    val cand =
+      candidates(refs, statsTree(PredicateTree.parse(predicate), refs))
     if (cand.isEmpty) read(v).limit(0).where(predicate)
-    else toLogical(refs, scan(refs, cand).drop("__file", "__pos"))
-      .where(predicate)
+    else rowsOf(refs, cand).where(predicate)
   }
 
   private def discardStaged(st: Staged): Unit = {
@@ -1882,150 +1873,115 @@ final class GraftTable private (spark: SparkSession, val root: String,
       FileRef("delta:base", "delta", expected, base.depth + 1)
   }
 
-  /** The CAS loop every mutator runs: re-reads the head and re-composes
-    * on conflict. `compose` returns the new manifest plus whatever it
-    * staged THIS attempt — a losing attempt's staged files are deleted
-    * before the retry (no orphan accumulation under contention); the
-    * winning attempt's staging markers clear after the publish.
-    * Stage-once mutators (append) pass their files outside the loop and
-    * re-compose metadata only. `compose` may return None to abort as a
-    * no-op (e.g. an already-committed streaming batch), in which case
-    * the current head is returned.
+  /** THE CAS loop every writer runs. `compose` plans the write against
+    * a base manifest and returns it as a [[Mutation]]: the
+    * new manifest as a function of the base it is applied to, the
+    * files it staged, and its read footprint. Each attempt publishes
+    * the mutation applied to the head it read; a loser checks the
+    * commits that landed since its compose base (Delta's conflict
+    * checker, the ConcurrentAppend / ConcurrentDeleteRead taxonomy —
+    * see [[canRebase]]):
+    *
+    *  - a winner REMOVED/REWROTE a footprint file (our staged rows embed
+    *    its old content, or we remove it too) → real conflict → discard
+    *    the staged files and re-compose;
+    *  - a winner ADDED a data file whose stats overlap the mutation's
+    *    keys/predicate → real conflict (an upsert could duplicate a
+    *    key, a delete could miss matching rows);
+    *  - a winner ADDED a deletion vector targeting a footprint file →
+    *    real conflict (our rewrite would resurrect its deleted rows);
+    *  - a winner committed METADATA (constraint, schema mode, declared
+    *    default) → re-compose: staged rows were validated and filled
+    *    against the old set;
+    *  - otherwise the writes are DISJOINT: the mutation re-applies to
+    *    the new head METADATA-ONLY — the staged files are re-pointed,
+    *    never deleted and re-computed. `stage()` runs once however many
+    *    disjoint writers land first (spec-pinned by the per-handle
+    *    stage counter). An append's footprint is empty, so it always
+    *    re-points; a metadata commit stages nothing, so re-applying it
+    *    is re-composing it.
+    *
+    * A mutator pays O(matched-file bytes) of COW rewrite per attempt,
+    * so re-running it per lost race is the WRONG cost model for the
+    * multi-writer norm (a streaming ingester racing a nightly GDPR
+    * delete). The footprint check diffs the ORIGINAL compose base
+    * against the CURRENT head in one shot, so transient state (a file
+    * added by one interleaved commit and compacted away by another) is
+    * judged by what actually survives — sound because staged output
+    * depends only on the content of the footprint files, and
+    * key-duplication/missed-match hazards live entirely in the files
+    * present at the final base.
+    *
+    * TXN GUARD: a writer carrying a batch id (`txn` ≥ 0) aborts as a
+    * no-op — discarding anything it staged and returning the head —
+    * as soon as the base it holds already carries that id. The check
+    * runs every attempt, so two racing deliveries of one batch commit
+    * exactly once.
     *
     * TXN CHECKPOINT (Delta's snapshot `txn` actions): every manifest
     * this loop publishes carries the FULL set of txn ids committed so
     * far as `kind = "txn"` rows (id in `lo`, plus one `lo = -1`
-    * checkpoint marker), managed HERE — compose's returned txn rows
+    * checkpoint marker), managed HERE — the mutation's own txn rows
     * are discarded and the canonical set (base's ∪ this commit's) is
     * appended, so cluster/restore can rebuild manifests freely without
-    * forgetting replay guards. [[committedTxns]] then reads ONE
-    * manifest per guarded mutation instead of every manifest in the
-    * log — the round-11 O(versions)-reads-per-streaming-batch cost,
-    * gone. A pre-upgrade base manifest (no marker row) falls back to
-    * the legacy full-log scan exactly once: the next commit writes the
-    * checkpointed form. */
-  private def commitLoop(txn: Long = -1L)(
-      compose: Seq[FileRef] => Option[(Seq[FileRef], Seq[Staged])]): Long = {
+    * forgetting replay guards. [[committedTxns]] then reads ONE slot
+    * per guarded write instead of every manifest in the log — the
+    * round-11 O(versions)-reads-per-streaming-batch cost, gone. A
+    * pre-upgrade base manifest (no marker row) falls back to the
+    * legacy full-log scan exactly once: the next commit writes the
+    * checkpointed form. The winning attempt's staging markers clear
+    * after the publish. */
+  private def commit(txn: Long = -1L)(
+      compose: Seq[FileRef] => Mutation): Long = {
+    var m: Mutation = null
+    var mBase: Seq[FileRef] = null // the base `m` was composed against
     while (true) {
       val h = head
       val baseSnap = if (h == 0) null else manifestSnap(h)
       val base = if (h == 0) Seq.empty[FileRef] else baseSnap.refs
-      compose(base) match {
-        case None => return h
-        case Some((refs0, staged0)) =>
-          val (refs1, staged1) = retireDvs(base, refs0, staged0)
-          val (refs, staged) = retireBlooms(base, refs1, staged1)
-          val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
-          val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
-            txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
-          // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past
-          // the base's stamp, so timestamp time travel binary-searches
-          // soundly even under clock skew or same-millisecond commits
-          val ts = math.max(System.currentTimeMillis(),
-            base.foldLeft(0L)((m, r) => math.max(m, r.ts)) + 1)
-          beforePublishHook()
-          if (tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
-                        txn, ts, baseSnap)) {
-            staged.foreach(s => s.markers.foreach(io.delete))
-            return h + 1
-          } else staged.foreach(discardStaged)
+      val txns = txnsIn(base)
+      if (txn >= 0 && txns.contains(txn)) {
+        if (m != null) m.staged.foreach(discardStaged)
+        return h
       }
-    }
-    0L // unreachable
-  }
-
-  /** The CAS loop for RE-STAGING mutators (merge / applyChanges /
-    * delete), with LOGICAL CONFLICT DETECTION on lost slot races
-    * (round-14 verdict #1 — Delta's conflict checker, the
-    * ConcurrentAppend / ConcurrentDeleteRead taxonomy): a loser that
-    * re-ran its whole mutation per attempt pays O(matched-file bytes)
-    * of COW rewrite per lost race, which is the WRONG cost model for
-    * the multi-writer norm (a streaming ingester racing a nightly
-    * GDPR delete — every night, the delete re-reads and re-writes its
-    * matched files once per interleaved append). Instead, `compose`
-    * now returns the mutation's LOGICAL footprint — the files it
-    * removes, the refs it adds, the files whose CONTENT its staged
-    * output depends on, and a predicate over foreign ADDED files —
-    * and a loser checks the commits that landed since its base:
-    *
-    *  - a winner REMOVED/REWROTE a file this mutation read or removes
-    *    → real conflict (our staged rows embed that file's old
-    *    content) → discard and fully re-compose;
-    *  - a winner ADDED a data file whose stats overlap this
-    *    mutation's keys/predicate → real conflict (an upsert could
-    *    duplicate a key, a delete could miss matching rows);
-    *  - a winner ADDED a deletion vector targeting a file this
-    *    mutation read → real conflict (our rewrite would resurrect
-    *    the winner's deleted rows);
-    *  - otherwise the mutations are DISJOINT: re-compose the manifest
-    *    against the new base METADATA-ONLY — the staged files are
-    *    re-pointed, never deleted and re-computed. `stage()` runs
-    *    once however many disjoint writers land first (spec-pinned by
-    *    the per-handle stage counter).
-    *
-    * The footprint check diffs the ORIGINAL compose base against the
-    * CURRENT head in one shot, so transient state (a file added by
-    * one interleaved commit and compacted away by another) is judged
-    * by what actually survives — sound for upsert/delete semantics
-    * because staged output depends only on the content of
-    * `readFiles`, and key-duplication/missed-match hazards live
-    * entirely in the files present at the final base. The txn replay
-    * guard re-checks each attempt: a batch id committed by a racing
-    * delivery aborts as a no-op, exactly as on the compose path. */
-  private def commitLoopMutate(txn: Long = -1L)(
-      compose: Seq[FileRef] => Option[GraftTable.Mutation]): Long = {
-    var m: GraftTable.Mutation = null
-    var myBase: Seq[FileRef] = null // the base `m` was composed against
-    var myBaseV = -1L
-    while (true) {
-      val h = head
-      val baseSnap = if (h == 0) null else manifestSnap(h)
-      val base = if (h == 0) Seq.empty[FileRef] else baseSnap.refs
-      if (m != null && h != myBaseV) {
-        // lost the slot: a replayed txn that landed via another writer
-        // aborts; a logically overlapping winner forces re-compose;
-        // a disjoint winner costs this check only
-        if (txn >= 0 && txnsIn(base).contains(txn)) {
-          m.staged.foreach(discardStaged)
-          return h
-        }
-        if (!canRebase(myBase, base, m)) {
-          m.staged.foreach(discardStaged)
-          m = null; myBase = null
-        }
+      if (m != null && !canRebase(mBase, base, m)) {
+        m.staged.foreach(discardStaged)
+        m = null
       }
-      if (m == null) {
-        compose(base) match {
-          case None => return h
-          case Some(mm) => m = mm; myBase = base; myBaseV = h
-        }
-      }
-      val refs0 = base.filterNot(r =>
-        r.kind == "data" && m.removed(r.file)) ++ m.added
-      val (refs1, staged1) = retireDvs(base, refs0, m.staged)
-      val (refs, stagedAll) = retireBlooms(base, refs1, staged1)
-      val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
+      if (m == null) { m = compose(base); mBase = base }
+      val (refs1, staged1) = retireDvs(base, m.manifest(base), m.staged)
+      val (refs, staged) = retireBlooms(base, refs1, staged1)
       val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
-        txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
+        (if (txn >= 0) txns + txn else txns).toSeq.sorted
+          .map(t => FileRef(s"txn:$t", "txn", t, t))
+      // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past
+      // the base's stamp, so timestamp time travel binary-searches
+      // soundly even under clock skew or same-millisecond commits
       val ts = math.max(System.currentTimeMillis(),
         base.foldLeft(0L)((mx, r) => math.max(mx, r.ts)) + 1)
       beforePublishHook()
       if (tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
                     txn, ts, baseSnap)) {
-        stagedAll.foreach(s => s.markers.foreach(io.delete))
+        staged.foreach(s => s.markers.foreach(io.delete))
         return h + 1
-      } else
-        // retire* staged per-attempt sidecar rewrites against THIS
-        // base — discard those, keep the mutation's own staged files
-        // for the rebase check at the top of the next attempt
-        stagedAll.filterNot(m.staged.contains).foreach(discardStaged)
+      }
+      // retire* staged per-attempt sidecar rewrites against THIS base —
+      // discard those, keep the mutation's own staged files for the
+      // rebase check at the top of the next attempt
+      staged.filterNot(m.staged.contains).foreach(discardStaged)
     }
     0L // unreachable
   }
 
-  /** test seam: runs immediately before every commitLoopMutate publish
-    * attempt, so a spec can deterministically interleave a competing
-    * commit into the race window */
+  /** a commit that stages nothing: `manifest` maps the head onto the
+    * new manifest (column, constraint and property commits; restore
+    * and clone, whose manifest is a constant) */
+  private def commitManifest(manifest: Seq[FileRef] => Seq[FileRef]): Long =
+    commit()(_ => Mutation(manifest))
+
+  /** test seam: runs immediately before every publish attempt of the
+    * commit loop, so a spec can deterministically interleave a
+    * competing commit into the race window */
   private[table] var beforePublishHook: () => Unit = () => ()
 
   /** per-handle count of data/DV staging passes — the spec's witness
@@ -2036,30 +1992,27 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** is `m` (composed against `oldBase`) logically disjoint from
     * everything that committed between `oldBase` and `newBase`? See
-    * [[commitLoopMutate]] for the three hazard classes. */
+    * [[commit]] for the hazard classes. */
   private def canRebase(oldBase: Seq[FileRef], newBase: Seq[FileRef],
-                        m: GraftTable.Mutation): Boolean = {
+                        m: Mutation): Boolean = {
     // a METADATA commit (constraint added/dropped, schema mode flipped,
     // column declared) landed in the window: our staged rows were
     // validated/filled against the OLD set — force the full
     // re-compose, whose stage() re-validates against the new one
     // (round-15 verdict #7) and whose fill sees the new default (x56)
     if (metaStamp(oldBase) != metaStamp(newBase)) return false
-    val oldDataF = oldBase.iterator.filter(_.kind == "data")
-      .map(_.file).toSet
-    val newData = newBase.filter(_.kind == "data")
-    val newDataF = newData.iterator.map(_.file).toSet
-    val depends = (f: String) => m.readFiles(f) || m.removed(f)
     // winner removed/rewrote a file whose content our staged rows embed
-    if (oldDataF.exists(f => !newDataF(f) && depends(f))) return false
+    val newF = newBase.iterator.map(_.file).toSet
+    if (oldBase.exists(r => m.footprint(r.file) && !newF(r.file)))
+      return false
+    val oldF = oldBase.iterator.map(_.file).toSet
+    val wAdded = newBase.filterNot(r => oldF(r.file))
     // winner added files that may hold our keys / match our predicate
-    val wAdded = newData.filterNot(r => oldDataF(r.file))
-    if (wAdded.nonEmpty && m.addConflicts(wAdded)) return false
+    val wData = wAdded.filter(_.kind == "data")
+    if (wData.nonEmpty && m.addConflicts(wData)) return false
     // winner's new deletion vectors may erase rows of files we read
-    val oldDvF = oldBase.iterator.filter(_.kind == "dv").map(_.file).toSet
-    val wNewDvs = newBase.collect {
-      case r if r.kind == "dv" && !oldDvF(r.file) => r.file }
-    wNewDvs.isEmpty || !dvTargets(wNewDvs).exists(depends)
+    val wDvs = wAdded.collect { case r if r.kind == "dv" => r.file }
+    wDvs.isEmpty || !dvTargets(wDvs).exists(m.footprint)
   }
 
   /** DV RETIREMENT (the round-11 advisor's monotonic-growth fix): a
@@ -2101,72 +2054,49 @@ final class GraftTable private (spark: SparkSession, val root: String,
       manifest.collect { case r if r.kind == "txn" && r.lo >= 0 => r.lo }.toSet
     else legacyTxnScan()
 
-  /** append-only commit: new files, every existing file by reference */
   /** the write-relevant METADATA a staged frame was prepared against:
     * declared defaults (addcol rows, materialized by `fillDefaults`)
     * and the constraint/schema-mode fingerprints (validated by
-    * `stage`). A stage-once writer whose base grew a DIFFERENT set
-    * must re-stage — its fills and validation ran against the old
-    * one. Same set [[canRebase]] treats as a forced re-compose. */
+    * `stage`). A base that grew a DIFFERENT set forces [[canRebase]]
+    * to re-compose, so the re-stage fills and validates against the
+    * new one. */
   private def metaStamp(refs: Seq[FileRef]): Set[String] =
     refs.iterator.filter(r => r.kind == "prop" || r.kind == "addcol")
       .map(_.file).toSet
 
-  /** the STAGE-ONCE commit loop append/streamAppend/overwriteAll
-    * share: fill declared defaults against the head, stage once,
-    * commit metadata-only — EXCEPT when a metadata commit (new
-    * declared default, new constraint, schema-mode flip) lands after
-    * our stage, in which case the staged frame was filled/validated
-    * against the old set: discard and re-stage against the new one
-    * (the stage-once twin of the mutators' canRebase metadata check).
-    * `alreadyDone` aborts as a no-op inside the CAS loop (streaming
-    * batch replay); `compose` builds the new manifest from (base,
-    * staged refs). */
-  private def stageOnceCommit(df: DataFrame, txn: Long = -1L,
-      alreadyDone: () => Boolean = () => false,
-      autoCompactAfter: Boolean = false)(
-      compose: (Seq[FileRef], Seq[FileRef]) => Seq[FileRef]): Long = {
-    while (true) {
-      val hr = headRefs
-      val stamp = metaStamp(hr)
-      val st = stage(toPhysical(hr, layoutFor(hr, fillDefaults(hr, df))))
-      var stale = false
-      var done = false
-      val v = commitLoop(txn) { base =>
-        if (alreadyDone()) { done = true; None }
-        else if (metaStamp(base) != stamp) { stale = true; None }
-        else Some((compose(base, st.refs), Seq.empty))
-      }
-      if (done) { discardStaged(st); return v }
-      if (!stale) {
-        st.markers.foreach(io.delete)
-        if (autoCompactAfter)
-          maybeAutoCompact() // may advance head past the returned version
-        return v
-      }
-      discardStaged(st)
+  /** the insert-shaped writers (append, streamAppend, overwriteAll):
+    * fill declared defaults and lay out the standing clustering
+    * against the base, stage, and publish `manifest(base, staged
+    * refs)` with an EMPTY footprint — a lost race re-points the staged
+    * files unless a metadata commit landed in the window. */
+  private def ingest(df: DataFrame, txn: Long = -1L,
+                     autoCompactAfter: Boolean = true)(
+      manifest: (Seq[FileRef], Seq[FileRef]) => Seq[FileRef]): Long = {
+    val v = commit(txn) { base =>
+      val st = stage(toPhysical(base, layoutFor(base, fillDefaults(base, df))))
+      Mutation(manifest(_, st.refs), Seq(st))
     }
-    0L // unreachable
+    if (autoCompactAfter)
+      maybeAutoCompact() // may advance head past the returned version
+    v
   }
 
-  def append(df: DataFrame): Long =
-    stageOnceCommit(df, autoCompactAfter = true)(_ ++ _)
+  /** append `df` as new files; every existing file carries by reference */
+  def append(df: DataFrame): Long = ingest(df)(_ ++ _)
 
   /** `append` with exactly-once batch-id idempotency — the w18 streaming
     * commit protocol behind the handle. Drive it from foreachBatch:
     * {{{ q.foreachBatch((b, id) => { t.streamAppend(b, id); () }) }}}
     * A replayed already-committed batch (Spark re-delivers the last
     * batch after a failure between sink commit and checkpoint write) is
-    * detected by its `txn` marker in the manifests and skipped — the
-    * check re-runs inside the CAS loop, so two racing deliveries of one
-    * batch commit exactly once. The txn scan reads manifests only
-    * (versions-scale; Delta pays the same log scan). */
+    * detected by its `txn` marker and skipped — the check re-runs
+    * inside the CAS loop, so two racing deliveries of one batch commit
+    * exactly once. The check reads ONE slot: every slot carries the
+    * complete txn checkpoint row set. */
   def streamAppend(df: DataFrame, batchId: Long): Long = {
     require(batchId >= 0, "batchId must be >= 0")
     if (committedTxns().contains(batchId)) return head
-    stageOnceCommit(df, txn = batchId,
-      alreadyDone = () => committedTxns().contains(batchId),
-      autoCompactAfter = true)(_ ++ _)
+    ingest(df, txn = batchId)(_ ++ _)
   }
 
   /** every batch id any committed version recorded — ONE slot read
@@ -2206,27 +2136,33 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * foreachBatch is NOT replay-safe without a txn guard; w20 gates
     * the safe pattern). */
   def merge(delta: DataFrame, txn: Long = -1L,
-            preCountedKeys: Long = -1L): Long = {
+            preCountedKeys: Long = -1L): Long =
+    upsert(delta, txn, preCountedKeys)(identity)
+
+  /** merge's and applyChanges' shared prelude: a txn some committed
+    * version carries is a no-op; otherwise the feed materializes ONCE
+    * (round-18, guide §1/§5) — the key count, the stats prune, the
+    * matched-file join and the staged rewrite each act on it, and an
+    * unpersisted feed (often a join or subquery output, or a subquery
+    * DML feed embedding a pruned sibling scan + exceptAll) re-executed
+    * its whole plan per action, ~4× the compute for zero benefit;
+    * feeds are change-scale by contract, the same budget
+    * GraftSqlMergeCommand's source materialization already assumes.
+    * The key count sizes the key-side joins, once — a caller that
+    * already counted the feed (x69's one-aggregate duplicate guard,
+    * the SQL MERGE's precheck) passes it in and saves the action.
+    * Rows keyed by the feed leave; `post(feed)` rows come back. */
+  private def upsert(feed: DataFrame, txn: Long, preCountedKeys: Long)(
+      post: DataFrame => DataFrame): Long = {
     if (txn >= 0 && committedTxns().contains(txn)) return head
-    // materialize the delta ONCE (round-18, guide §1/§5): the key
-    // count, the stats prune, the matched-file join and the staged
-    // rewrite each act on it — an unpersisted delta (often a join or
-    // subquery output) re-executed its whole plan per action, 4× the
-    // compute for zero benefit; delta frames are change-scale, the
-    // same budget GraftSqlMergeCommand's source materialization
-    // already assumes
-    val mat = delta.persist(org.apache.spark.storage.StorageLevel
+    val mat = feed.persist(org.apache.spark.storage.StorageLevel
       .MEMORY_AND_DISK)
     try {
-      val dkeys = mat.select(col(keyCol))
-      // sizes the key-side joins, once — callers that already counted
-      // the delta (x69's one-aggregate duplicate guard) pass it in
+      val keys = mat.select(col(keyCol))
       val nKeys =
-        if (preCountedKeys >= 0) preCountedKeys else dkeys.count()
-      commitLoopMutate(txn = txn) { base =>
-        if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, mat, dkeys, nKeys)
-      }
+        if (preCountedKeys >= 0) preCountedKeys else keys.count()
+      val rows = post(mat)
+      commit(txn)(composeApply(_, rows, keys, nKeys))
     } finally mat.unpersist()
   }
 
@@ -2248,7 +2184,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val cand = bloomRefineKeys(base, data,
       pruneByKeys(data, dkeys, pk), dkeys, nKeys, pk)
     if (cand.isEmpty) return read(head).limit(0)
-    val rows = toLogical(base, scan(base, cand)).drop("__file", "__pos")
+    val rows = rowsOf(base, cand)
     // a USING-column semi-join projects the join key FIRST in Spark's
     // analyzer rewrite — restore the snapshot's column order (the
     // caller-visible contract, and what downstream writes record)
@@ -2288,31 +2224,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * duplicate-key tables: matched postimages plus carried sibling
     * identity rows under the same key. */
   def applyChanges(feed: DataFrame, txn: Long = -1L,
-                   preCountedKeys: Long = -1L): Long = {
-    if (txn >= 0 && committedTxns().contains(txn)) return head
-    // materialize the feed ONCE (round-18, guide §1/§5): the subquery
-    // DML commands build feeds whose plans embed a pruned sibling
-    // scan + exceptAll — re-executing that per action (key count,
-    // prune, matched files, staged rewrite) multiplied the mutation's
-    // read cost ~4×; feeds are change-scale by contract, the same
-    // budget the MERGE source materialization assumes
-    val mat = feed.persist(org.apache.spark.storage.StorageLevel
-      .MEMORY_AND_DISK)
-    try {
-      val post = mat.where(col("change_type") =!= "delete")
-        .drop("change_type")
-      val fkeys = mat.select(col(keyCol))
-      // sizes the key-side joins, once — a caller that already
-      // counted the feed (the SQL MERGE's one-aggregate precheck)
-      // passes the count in and saves the action
-      val nKeys =
-        if (preCountedKeys >= 0) preCountedKeys else fkeys.count()
-      commitLoopMutate(txn = txn) { base =>
-        if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, post, fkeys, nKeys)
-      }
-    } finally mat.unpersist()
-  }
+                   preCountedKeys: Long = -1L): Long =
+    upsert(feed, txn, preCountedKeys)(
+      _.where(col("change_type") =!= "delete").drop("change_type"))
 
   /** ROW-addressed variant of [[applyChanges]] for the subquery DML
     * commands (ANSI UPDATE/DELETE semantics on duplicate-key tables,
@@ -2340,9 +2254,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
                                oldImages: DataFrame): Long = {
     val fkeys = oldImages.select(col(keyCol))
     val nKeys = fkeys.count() // sizes the key-side joins, once
-    commitLoopMutate() { base =>
-      composeApply(base, post, fkeys, nKeys, oldImages = Some(oldImages))
-    }
+    commit()(composeApply(_, post, fkeys, nKeys,
+      oldImages = Some(oldImages)))
   }
 
   /** the delta-key side of composeApply's two joins, sized ADAPTIVELY
@@ -2368,7 +2281,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
                            allKeys: DataFrame,
                            nKeys: Long,
                            oldImages: Option[DataFrame] = None)
-      : Option[GraftTable.Mutation] = {
+      : Mutation = {
       val data = base.filter(_.kind == "data")
       val pk = physKeyOf(base)
       val cand = bloomRefineKeys(base, data,
@@ -2418,14 +2331,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
         carried.foldLeft(kept)(_ unionByName _)
           .unionByName(fillDefaults(base, post),
             allowMissingColumns = true)))
-      val ms = matched.toSet
       // footprint for the lost-race rebase check: content dependency =
       // the matched files (their unmatched rows ride our rewrite);
       // foreign adds conflict when their key stats could hold one of
       // OUR keys (a kept foreign file with a delta key would duplicate
       // it against our staged upsert row)
-      Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms,
-        wAdded => pruneByKeys(wAdded, allKeys, pk).nonEmpty))
+      Mutation.rewrite(matched.toSet, st.refs, Seq(st),
+        wAdded => pruneByKeys(wAdded, allKeys, pk).nonEmpty)
   }
 
   /** bloom refinement of a MERGE's key-pruned candidates — Delta's
@@ -2497,49 +2409,64 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def delete(predicate: Column, mode: String = "cow"): Long = {
     require(mode == "cow" || mode == "mor", s"unknown delete mode: $mode")
     val tree0 = PredicateTree.parse(predicate)
-    commitLoopMutate() { base =>
-      // the predicate speaks LOGICAL names: its skeleton maps to
-      // physical for stats/bloom pruning, and row evaluation happens
-      // on the logically-projected scan (x53)
-      val tree = statsTree(tree0, base)
-      // foreign-add conflict = a winner's file whose stats may satisfy
-      // the predicate (our delete, serialized LAST, would have to cover
-      // its rows); the stats evaluator is the same one candidate
-      // pruning trusts, so a false "may match" costs a re-stage, never
-      // a wrong rebase
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      val ms = matched.toSet
+    commit() { base =>
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       if (matched.isEmpty)
         // commits an empty version (mutator contract); its only
         // rebase dependency is that no foreign add matches
-        Some(GraftTable.Mutation(Set.empty, Seq.empty, Seq.empty,
-          Set.empty, addConflicts))
+        Mutation(identity, addConflicts = addConflicts)
       else if (mode == "cow") {
-        val st = stage(toPhysical(base,
-          toLogical(base, scan(base, matched).drop("__file", "__pos"))
-            .where(coalesce(!predicate, lit(true)))))
-        Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms, addConflicts))
+        val st = stage(toPhysical(base, rowsOf(base, matched)
+          .where(coalesce(!predicate, lit(true)))))
+        Mutation.rewrite(matched.toSet, st.refs, Seq(st), addConflicts)
       } else {
         val st = stageDv(toLogical(base, scan(base, matched))
           .where(predicate)
           .select(col("__file").as("dv_file"), col("__pos").as("dv_pos")))
         // MoR removes nothing, but its DV positions are row indexes
         // INTO the matched files — any winner that rewrites them
-        // invalidates the positions, hence readFiles = matched
-        Some(GraftTable.Mutation(Set.empty, st.refs, Seq(st), ms,
-          addConflicts))
+        // invalidates the positions, hence the footprint = matched
+        Mutation(_ ++ st.refs, Seq(st), matched.toSet, addConflicts)
       }
     }
   }
+
+  /** the predicate writers' shared plan (delete, update,
+    * overwriteWhere): the base's files holding a row where `predicate`
+    * is TRUE — stats- and bloom-pruned candidates, refined by scanning
+    * the candidates only — plus the foreign-add conflict test: a
+    * winner's file whose stats may satisfy the predicate (the writer,
+    * serialized LAST, would have to cover its rows); the stats
+    * evaluator is the same one candidate pruning trusts, so a false
+    * "may match" costs a re-stage, never a wrong rebase. The predicate
+    * speaks LOGICAL names: its skeleton maps to physical for
+    * stats/bloom pruning, and row evaluation happens on the
+    * logically-projected scan (x53). */
+  private def matchPredicate(base: Seq[FileRef], tree0: PredicateTree.Node,
+                             predicate: Column)
+      : (Seq[String], Seq[FileRef] => Boolean) = {
+    val tree = statsTree(tree0, base)
+    val cand = candidates(base, tree)
+    val matched =
+      if (cand.isEmpty) Seq.empty[String]
+      else toLogical(base, scan(base, cand)).where(predicate)
+        .select(col("__file")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+    (matched, _.exists(r => eval.mayMatch(tree, r)))
+  }
+
+  /** the data files of `refs` a resolved predicate skeleton may match:
+    * manifest stats prune, bloom sidecars refine */
+  private def candidates(refs: Seq[FileRef],
+                         tree: PredicateTree.Node): Seq[String] = {
+    val data = refs.filter(_.kind == "data")
+    bloomRefine(refs, data,
+      data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
+  }
+
+  /** the LOGICAL rows of `files` (DV-applied, no provenance columns) */
+  private def rowsOf(refs: Seq[FileRef], files: Seq[String]): DataFrame =
+    toLogical(refs, scan(refs, files).drop("__file", "__pos"))
 
   /** row-level UPDATE (Delta's `UPDATE ... SET ... WHERE`, the DML
     * verb between merge-by-key and delete-by-predicate): rows where
@@ -2558,11 +2485,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def update(predicate: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     val tree0 = PredicateTree.parse(predicate)
-    commitLoopMutate() { base =>
-      val tree = statsTree(tree0, base)
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
+    commit() { base =>
       val lcols = logicalCols(base)
       set.keys.foreach { c =>
         require(lcols.contains(c),
@@ -2570,20 +2493,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
         require(c != keyCol, s"cannot UPDATE the key column '$c' — " +
           "use merge() to move rows between keys")
       }
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      val ms = matched.toSet
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       if (matched.isEmpty)
-        Some(GraftTable.Mutation(Set.empty, Seq.empty, Seq.empty,
-          Set.empty, addConflicts))
+        Mutation(identity, addConflicts = addConflicts)
       else {
-        val touched = toLogical(base,
-          scan(base, matched).drop("__file", "__pos"))
+        val touched = rowsOf(base, matched)
         val types = touched.schema.fields.map(f => f.name -> f.dataType)
           .toMap
         // ONE select evaluates every RHS against the old row; a NULL
@@ -2600,7 +2514,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
           }
         }: _*)
         val st = stage(toPhysical(base, updated))
-        Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms, addConflicts))
+        Mutation.rewrite(matched.toSet, st.refs, Seq(st), addConflicts)
       }
     }
   }
@@ -2622,32 +2536,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
     require(violating == 0,
       s"overwriteWhere: $violating replacement row(s) do not satisfy " +
         "the predicate — a backfill must stay inside its own window")
-    commitLoopMutate() { base =>
-      val tree = statsTree(tree0, base)
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      val ms = matched.toSet
-      val kept =
-        if (matched.isEmpty) None
-        else Some(toLogical(base, scan(base, matched).drop("__file", "__pos"))
-          .where(coalesce(!predicate, lit(true))))
+    commit() { base =>
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val df2 = fillDefaults(base, df) // write-time defaults (x56)
-      val staged = kept match {
-        case Some(k) =>
-          stage(toPhysical(base,
-            k.unionByName(df2, allowMissingColumns = true)))
-        case None => stage(toPhysical(base, df2))
-      }
-      Some(GraftTable.Mutation(ms, staged.refs, Seq(staged), ms,
-        addConflicts))
+      val st = stage(toPhysical(base,
+        if (matched.isEmpty) df2
+        else rowsOf(base, matched).where(coalesce(!predicate, lit(true)))
+          .unionByName(df2, allowMissingColumns = true)))
+      Mutation.rewrite(matched.toSet, st.refs, Seq(st), addConflicts)
     }
   }
 
@@ -2662,7 +2558,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * replacement. Old files remain owned by their versions for time
     * travel until `expire`. */
   def overwriteAll(df: DataFrame): Long =
-    stageOnceCommit(df) { (base, staged) =>
+    ingest(df, autoCompactAfter = false) { (base, staged) =>
       base.filter(r => GraftTable.CarriedKinds(r.kind)) ++ staged
     }
 
@@ -2716,19 +2612,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
       if (clusterBy.isEmpty) shaped
       else shaped.repartitionByRange(clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    val st = stage(laidOut)
-    val v = commitLoop() { _ =>
+    commit() { _ =>
+      val st = stage(laidOut)
       // the replacement ignores the base snapshot entirely: fresh
       // declarations + staged files ARE the table (txn rows are
       // re-attached canonically by the loop); the NEW key stamp rides
       // the same commit — a stale stamp surviving a key-changing
       // replace would be worse than none, so an unstamped replace
       // (bare-handle callers) drops any prior stamp with the base
-      Some((withFeature(addRows, "addcol") ++ st.refs
-        ++ keyRecord.map(GraftTable.keyRecRow), Seq.empty))
+      val refs = withFeature(addRows, "addcol") ++ st.refs ++
+        keyRecord.map(GraftTable.keyRecRow)
+      Mutation(_ => refs, Seq(st))
     }
-    st.markers.foreach(io.delete)
-    v
   }
 
   /** small-file compaction (OPTIMIZE): bin-packs only files under
@@ -2737,10 +2632,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * actual shape; the previous whole-snapshot rewrite was O(table) per
     * call). Folding applies pending DVs to the folded files, so
     * compaction also physically reclaims MoR-deleted rows. Always
-    * commits a version (mutator contract), even when nothing folds. */
+    * commits a version (mutator contract), even when nothing folds.
+    * The folded files are the footprint: a racing append re-points the
+    * fold onto the new head, a racing rewrite of a folded file re-folds. */
   def compact(targetFiles: Int = 1, smallFileBytes: Long = 64L << 20,
               where: Option[Column] = None): Long =
-    commitLoop() { base =>
+    commit() { base =>
       val data = base.filter(_.kind == "data")
       // predicate-scoped compaction (Delta's OPTIMIZE ... WHERE): fold
       // only small files whose STATS overlap the predicate — an
@@ -2763,26 +2660,28 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // still ask the filesystem
       val small = scoped.filter(r =>
         (if (r.bytes >= 0) r.bytes else io.length(r.file)) < smallFileBytes)
-      if (small.size <= math.max(1, targetFiles))
-        Some(foldBloomSidecars(base, Seq.empty))
-      else {
-        // folded files stay KEY-SORTED: the bigger file's parquet
-        // row-group stats keep point lookups cheap inside it, and its
-        // manifest key range stays as tight as the inputs' union
-        // (skipped for key-less handles — SQL OPTIMIZE opens with a
-        // sentinel key the frame doesn't carry)
-        val folded = scan(base, small.map(_.file)).drop("__file", "__pos")
-          .coalesce(math.max(1, targetFiles))
-        val pk = physKeyOf(base) // folded frames are physical (x53)
-        val st = stage(
-          if (folded.columns.contains(pk))
-            folded.sortWithinPartitions(pk)
-          else folded)
-        val ss = small.map(_.file).toSet
-        Some(foldBloomSidecars(
-          base.filterNot(r => r.kind == "data" && ss(r.file)) ++ st.refs,
-          Seq(st)))
-      }
+      val (refs, staged) =
+        if (small.size <= math.max(1, targetFiles))
+          foldBloomSidecars(base, Seq.empty)
+        else {
+          // folded files stay KEY-SORTED: the bigger file's parquet
+          // row-group stats keep point lookups cheap inside it, and its
+          // manifest key range stays as tight as the inputs' union
+          // (skipped for key-less handles — SQL OPTIMIZE opens with a
+          // sentinel key the frame doesn't carry)
+          val folded = scan(base, small.map(_.file))
+            .drop("__file", "__pos").coalesce(math.max(1, targetFiles))
+          val pk = physKeyOf(base) // folded frames are physical (x53)
+          val st = stage(
+            if (folded.columns.contains(pk))
+              folded.sortWithinPartitions(pk)
+            else folded)
+          val ss = small.map(_.file).toSet
+          foldBloomSidecars(
+            base.filterNot(r => r.kind == "data" && ss(r.file)) ++ st.refs,
+            Seq(st))
+        }
+      Mutation.diff(base, refs, staged)
     }
 
   // ---- auto-compaction ----------------------------------------------
@@ -2940,7 +2839,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // across renames (physical names never change)
     val zPhys = zorderBy.map(physicalOf(headRefs))
     val gen = GraftTable.zgenOf(zPhys)
-    commitLoop() { base =>
+    commit() { base =>
       val all = base.filter(_.kind == "data")
       // INCREMENTAL clustering (Delta liquid's cadence): rewrite only
       // files not already stamped with this spec's generation — a
@@ -2952,7 +2851,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // stats still prune exactly; OPTIMIZE-FULL semantics remain the
       // default incremental=false).
       val data = if (incremental) all.filter(_.zgen != gen) else all
-      if (data.isEmpty) Some((base, Seq.empty))
+      if (data.isEmpty) Mutation(identity)
       else {
         val snap = scan(base, data.map(_.file)).drop("__file", "__pos")
         // fail LOUDLY on a column the curve can't normalize (the
@@ -3008,17 +2907,19 @@ final class GraftTable private (spark: SparkSession, val root: String,
         // later incremental pass knows to leave them alone
         val stamped = st.refs.map(r =>
           if (r.kind == "data") r.copy(zgen = gen) else r)
-        if (incremental) {
-          val rewritten = data.map(_.file).toSet
-          Some((base.filterNot(r =>
-            r.kind == "data" && rewritten(r.file)) ++ stamped, Seq(st)))
-        } else
+        // the rewritten files are the footprint: a racing append's
+        // files carry onto the clustered head, a racing rewrite of one
+        // of ours re-clusters
+        if (incremental)
+          Mutation.rewrite(data.map(_.file).toSet, stamped, Seq(st))
+        else
           // the full rewrite is the whole live row set with DVs
           // applied: the new manifest is the staged files plus the
           // table-level metadata rows (column mapping, property
           // fingerprints), which describe the table, not its files
-          Some((base.filter(r => GraftTable.CarriedKinds(r.kind)) ++
-            stamped, Seq(st)))
+          Mutation.diff(base,
+            base.filter(r => GraftTable.CarriedKinds(r.kind)) ++ stamped,
+            Seq(st))
       }
     }
   }
@@ -3179,7 +3080,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     target.filter(r => r.kind == "data" || r.kind == "dv")
       .foreach(r => require(io.exists(r.file),
         s"version $v is not restorable: ${r.file} was vacuumed"))
-    commitLoop() (_ => Some((target, Seq.empty)))
+    commitManifest(_ => target)
   }
 
   /** one row per committed version: the audit/debug view (Delta's
@@ -3395,7 +3296,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   // run) — exposed so the spec can hold a table in exactly that state
   private[table] def stageForTest(df: DataFrame): Staged = stage(df)
   private[table] def adoptForTest(st: Staged): Long = {
-    val v = commitLoop() (base => Some((base ++ st.refs, Seq.empty)))
+    val v = commitManifest(_ ++ st.refs)
     st.markers.foreach(io.delete)
     v
   }
@@ -3609,19 +3510,42 @@ object GraftTable {
   private[table] final case class Snap(refs: Seq[FileRef], depth: Long,
                                        commitTxn: Long, commitTs: Long)
 
-  /** a re-staging mutation's LOGICAL footprint (see
-    * [[GraftTable.commitLoopMutate]]): `removed` = the base data files
-    * it drops, `added` = the refs it contributes (its staged data/DV/
-    * bloom rows), `staged` = this composition's staged directories,
-    * `readFiles` = the data files whose CONTENT the staged output
-    * embeds (a merge's matched files — their unmatched rows ride the
-    * rewrite), `addConflicts` = does a set of FOREIGN added data refs
-    * overlap this mutation's keys/predicate (stats-level — inclusive
-    * bounds make a false positive a harmless re-stage, never a wrong
-    * rebase). */
+  /** one writer's commit as the CAS loop ([[GraftTable.commit]]) sees
+    * it: `manifest` maps the base it is applied to onto the new
+    * manifest, `staged` = this composition's staged directories, and
+    * the read footprint — `footprint` = the files whose CONTENT the
+    * staged output embeds or that the write removes (a merge's matched
+    * files — their unmatched rows ride the rewrite), `addConflicts` =
+    * does a set of FOREIGN added data refs overlap this write's
+    * keys/predicate (stats-level — inclusive bounds make a false
+    * positive a harmless re-stage, never a wrong rebase). */
   private[table] final case class Mutation(
-      removed: Set[String], added: Seq[FileRef], staged: Seq[Staged],
-      readFiles: Set[String], addConflicts: Seq[FileRef] => Boolean)
+      manifest: Seq[FileRef] => Seq[FileRef],
+      staged: Seq[Staged] = Nil,
+      footprint: Set[String] = Set.empty,
+      addConflicts: Seq[FileRef] => Boolean = _ => false)
+
+  private[table] object Mutation {
+    /** a rewrite: base minus `removed` plus `added`, with the removed
+      * files as its footprint */
+    def rewrite(removed: Set[String], added: Seq[FileRef],
+                staged: Seq[Staged],
+                addConflicts: Seq[FileRef] => Boolean = _ => false)
+        : Mutation =
+      Mutation(_.filterNot(r => removed(r.file)) ++ added, staged, removed,
+        addConflicts)
+
+    /** the rewrite that turns `base` into `refs`, a manifest composed
+      * whole (compact, cluster) — so files a racing writer adds carry */
+    def diff(base: Seq[FileRef], refs: Seq[FileRef],
+             staged: Seq[Staged]): Mutation = {
+      val kept = refs.iterator.map(_.file).toSet
+      val had = base.iterator.map(_.file).toSet
+      rewrite(base.iterator.collect {
+        case r if r.kind != "txn" && !kept(r.file) => r.file }.toSet,
+        refs.filterNot(r => had(r.file)), staged)
+    }
+  }
 
   /** tiny synchronized access-ordered LRU for the per-handle manifest
     * memos (null = absent, matching the ConcurrentHashMap contract the
@@ -3723,7 +3647,7 @@ object GraftTable {
       src.io.readUtf8(s"$srcRoot/$p")
         .foreach(s => t.io.writeUtf8(s"$root/$p", s))
     }
-    t.commitLoop() (_ => Some((refs, Seq.empty)))
+    t.commitManifest(_ => refs)
     t
   }
 }

@@ -149,7 +149,7 @@ class AddColumnSpec extends AnyFunSuite {
       rows(1L to 4L: _*))
     val t2 = GraftTable.open(spark, t.root, "k")
     // t2's append stages against the pre-add metadata; the declaration
-    // lands inside the publish window — the stage-once loop must
+    // lands inside the publish window — the commit loop must
     // discard and re-stage so the committed rows carry the default
     var fired = false
     t2.beforePublishHook = () => {

@@ -308,6 +308,8 @@ class ConflictRebaseSpec extends AnyFunSuite {
     val v = t.compact()
     t.beforePublishHook = () => ()
     assert(v == 3)
+    assert(t.stageCounter.get == 1,
+      "the append leaves every folded file alone: the fold re-points")
     val got = kv(t.read())
     assert(got(500L) == "a500" && got(7L) == "s7" && got.size == 61)
     assertNoOrphans(t)
@@ -320,6 +322,8 @@ class ConflictRebaseSpec extends AnyFunSuite {
     val v = t.cluster(Seq("k"), targetFiles = 2)
     t.beforePublishHook = () => ()
     assert(v == 3)
+    assert(t.stageCounter.get == 1,
+      "the append leaves every rewritten file alone: the rewrite re-points")
     val got = kv(t.read())
     assert(got(500L) == "a500" && got(7L) == "s7" && got.size == 61)
     assertNoOrphans(t)
